@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loader for the driver-generated synthetic tables (TESTDATA.md /
   * FIXTURES.md §B): one parquet per table under `sfDir`.
@@ -9,6 +10,11 @@ import org.apache.spark.sql.functions._
   * Parquet scans are columnar + vectorized; Catalyst pushes filters and
   * prunes columns, so callers should express selection declaratively and
   * NOT pre-materialize.
+  *
+  * Every reference builds a fresh Dataset over a fresh file listing; only
+  * the inferred schema (and the scan-partition count of `spread` tables)
+  * is memoized, per (session, path), until the file or the session's
+  * parquet settings change (see `Tables.Scan`).
   */
 final class Tables(spark: SparkSession, sfDir: String) {
   def apply(name: String): DataFrame =
@@ -47,17 +53,71 @@ object Tables {
   def apply(spark: SparkSession, sfDir: String): Tables =
     new Tables(spark, sfDir)
 
-  /** Per-(session, path) memo of the PROBED scan-partition count, so the
-    * scan-parallelism probe below runs once per table per session, not
-    * once per query. Only the Int is memoized — the frame itself is
-    * rebuilt per call, so each query plans against a fresh file listing
-    * and no two consumers share one plan object (a shared frame made one
-    * consumer's cache()/unpersist() visible to every other and froze the
-    * listing for the session — r16 advice). Entries whose context has
-    * stopped are purged on access (the queries.Graph cache discipline).
+  /** What a parquet read of one path needs from an earlier reference in
+    * the same session: the schema inference returned (Spark infers it with
+    * a one-task job on every bare `spark.read.parquet`) and, for `spread`
+    * tables, the planned scan-partition count.
+    *
+    * Valid while `stamp` (the path's listing: name, length and
+    * modification time of the file, or of each direct child of a
+    * directory) and `settings` (the session's parquet settings, e.g.
+    * `spark.sql.legacy.parquet.nanosAsLong`, which turns TIMESTAMP(NANOS)
+    * into a long) both still match; a table rewritten at the same path is
+    * re-inferred, not served stale.
     */
-  private val probedParts = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Integer]()
+  private final class Scan(val stamp: Seq[(String, Long, Long)],
+      val settings: Map[String, String], val schema: StructType,
+      read: () => DataFrame) {
+    lazy val parts: Int = read().rdd.getNumPartitions
+  }
+
+  /** Per-(session, path) [[Scan]] memo. No frame is memoized: [[load]]
+    * builds a fresh Dataset per call, so no two consumers share one plan
+    * object (a shared frame made one consumer's cache()/unpersist()
+    * visible to every other). Entries whose context has stopped are
+    * purged on access (the queries.Graph cache discipline).
+    */
+  private val scans = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String), Scan]()
+
+  private def scan(spark: SparkSession, path: String): Scan = {
+    val it = scans.keySet().iterator()
+    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
+    val stamp = listing(spark, path)
+    val settings = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") }
+    val hit = scans.get((spark, path))
+    // an empty listing (missing path, glob, empty dir) is never memoized:
+    // the bare read below raises or infers exactly as it would uncached
+    if (hit != null && stamp.nonEmpty && hit.stamp == stamp &&
+        hit.settings == settings) hit
+    else {
+      val schema = spark.read.parquet(path).schema
+      val s = new Scan(stamp, settings, schema,
+        () => spark.read.schema(schema).parquet(path))
+      if (stamp.nonEmpty) scans.put((spark, path), s)
+      s
+    }
+  }
+
+  /** Name, length and modification time of `path` (a file) or of each
+    * direct child (a directory) — Hadoop metadata only, no Spark job.
+    */
+  private def listing(spark: SparkSession, path: String)
+      : Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).toSeq
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+  }
+
+  /** The schema `spark.read.parquet(path)` would infer now, memoized per
+    * (session, path) with the invalidation rule of [[Scan]].
+    */
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    scan(spark, path).schema
 
   /** `spread` is opt-in per table: measured at sf0.1 (bench_r16_before vs
     * _mid), spreading pays off exactly where per-row expression work
@@ -69,17 +129,12 @@ object Tables {
     */
   private[core] def load(spark: SparkSession, path: String,
       spread: Boolean): DataFrame = {
-    val it = probedParts.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    }
-    val df = spark.read.parquet(path)
+    val s = scan(spark, path)
+    val df = spark.read.schema(s.schema).parquet(path)
     if (!spread) df
     else {
-      val parts: Int = probedParts.computeIfAbsent((spark, path),
-        _ => df.rdd.getNumPartitions)
       val target = spark.sparkContext.defaultParallelism
-      if (parts * 2 <= target) df.repartition(target) else df
+      if (s.parts * 2 <= target) df.repartition(target) else df
     }
   }
 
@@ -104,7 +159,7 @@ object Tables {
     * defaultParallelism, which tracks SPARK_GRAFT_CPUS.
     *
     * The probe (`df.rdd.getNumPartitions`) only plans the bare scan — no
-    * job runs — and the result is memoized per (session, path) above.
+    * job runs. [[load]] memoizes it per (session, path) in [[Scan]].
     */
   def spreadNarrowScan(spark: SparkSession, df: DataFrame)
       : DataFrame = {

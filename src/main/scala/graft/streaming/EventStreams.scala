@@ -80,14 +80,14 @@ object EventStreams {
     val dir =
       if (chunks > 1) chunkedStage(spark, path, chunks)
       else streamableDir(path)
-    // Probe the STORED type with a one-off batch read: the testdata has
+    // Probe the STORED type with the memoized batch schema: the testdata has
     // shipped ts as TIMESTAMP(NANOS) (reads as long under nanosAsLong),
     // as plain timestamp[us] (reads as TIMESTAMP_NTZ), and as UTC-adjusted
     // micros (TimestampType). Pinning one schema here is what broke all
     // three stateful streaming queries when the encoding drifted —
     // normalize every case to the session-UTC TimestampType instead
     // (same contract as core.Tables.normalizeTs).
-    val storedTs = spark.read.parquet(dir).schema("ts").dataType
+    val storedTs = graft.core.Tables.schemaOf(spark, dir)("ts").dataType
     val schema = StructType(rawSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = storedTs) else f))
     // no maxFilesPerTrigger chunking: with multi-file input, per-file
